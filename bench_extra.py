@@ -68,9 +68,9 @@ def kron17_phases(spark):
         sc.setJobDescription("scan-only")
         out["scan_only"], _ = timed("scan-only (noop)", lambda: noop(stream))
         sc.setJobDescription("canonical+generate (pre-exchange)")
-        canon = alg.packed_updates(stream)
-        sc.setJobDescription("packed_updates (exchange + net agg)")
-        out["packed_updates"], _ = timed("packed_updates (noop)", lambda: noop(canon))
+        canon = alg._packed_skeys(stream)
+        sc.setJobDescription("packed_skeys (exchange + net agg)")
+        out["packed_skeys"], _ = timed("packed_skeys (noop)", lambda: noop(canon))
         sc.setJobDescription("build_state (full)")
         out["build_state"], _ = timed(
             "build_state count", lambda: alg.build_state(stream).count()

@@ -13,9 +13,11 @@ The Spark rendering of the reference's CC pipeline (SURVEY.md §3.1):
                                                pruning, done BEFORE the shuffle)
                                                → partial per-partition sums →
                                                groupBy(root) final sum + sample
-  driver DSU on sampled edges                  numpy DSU on collected (root,eid)
-                                               rows (≤ #components per round,
-                                               geometrically shrinking)
+  boruvka_emulation loop                       _boruvka: one loop for both entry
+                                               points; labels live in a numpy
+                                               DSU (boruvka) or a checkpointed
+                                               table (connected_components_
+                                               distributed)
 
 State is a DataFrame (vertex: long, det: binary, grp: array<binary>) — the
 Spark image of the reference's Bucket* arrays, laid out one sparse blob per
@@ -34,15 +36,21 @@ collapses repeat updates JVM-side before any Python work.
 
 from __future__ import annotations
 
+import math
+import time
+import warnings
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graphzeppelin_spark.config import SketchConfig
 from graphzeppelin_spark.sketch.dsu import NumpyDSU
 from graphzeppelin_spark.sketch.kernel import (
+    FAIL,
     GOOD,
     ZERO,
     SketchGeometry,
@@ -88,9 +96,18 @@ PARTIAL_SCHEMA = T.StructType(
     ]
 )
 
-# driver-finish batching (see _finish_driver_side): FINISH_BATCH_GROUPS
-# sample groups per collected batch. Interleaved A/B at every probed regime
-# — kron_17 at 2406 and at 21 active components, the sf0.1 chain at 5165,
+SAMPLE_SCHEMA = T.StructType(
+    [
+        T.StructField("root", T.LongType(), False),
+        T.StructField("grp", T.IntegerType(), False),
+        T.StructField("status", T.IntegerType(), False),
+        T.StructField("eid", T.LongType(), False),
+    ]
+)
+
+# driver-finish batching (see _DriverLabels): FINISH_BATCH_GROUPS sample
+# groups per collected batch. Interleaved A/B at every probed regime —
+# kron_17 at 2406 and at 21 active components, the sf0.1 chain at 5165,
 # kron_21 at 305 — narrow 3-group batches beat or tie wider ones (kron_17
 # finish 1.39-1.76s vs 2.9-7.8s gate-sized; kron_21 9.1s vs 13.5s for 3 vs
 # 6 groups): the reduce scans and decodes the WHOLE state at the batch's
@@ -100,24 +117,15 @@ PARTIAL_SCHEMA = T.StructType(
 FINISH_BATCH_GROUPS = 3
 
 # sample groups consumed by boruvka's round 0 (every vertex samples its own
-# sketch): the extra group rides the same map pass and collapses the active
-# set entering the driver finish ~100x at kron_17 (see _boruvka_impl)
+# sketch): a second group costs nothing extra (identical transfer/decode
+# shape) and collapses the active set entering the driver finish ~100x at
+# kron_17 (2406 active components after 1 group vs 21 after 2, at the same
+# 0.6-0.7s round cost)
 ROUND0_GROUPS = 2
 
-# build_state's fused single-column ingest key (see _packed_skeys): the
-# magnitude eid*2 + is_hi < 2*n^2 must stay inside a signed int64, so the
-# fused path engages only for num_vertices <= 2^30 (~10^9 vertices — every
-# workload in this repo); larger universes keep the two-column path.
-FUSED_KEY_MAX_N = 1 << 30
-
-SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("root", T.LongType(), False),
-        T.StructField("grp", T.IntegerType(), False),
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("eid", T.LongType(), False),
-    ]
-)
+# the largest vertex universe the fused ingest key can encode: |skey| =
+# eid*2 + is_hi <= 2n^2 - 1 must fit a signed int64
+MAX_NUM_VERTICES = 1 << 31
 
 
 def _u64_col_to_i64(arr: np.ndarray) -> np.ndarray:
@@ -138,6 +146,11 @@ class SketchCC:
         config: "SketchConfig | None" = None,
         groups_per_round: int = 4,
     ):
+        if num_vertices > MAX_NUM_VERTICES:
+            raise ValueError(
+                f"num_vertices={num_vertices} exceeds {MAX_NUM_VERTICES}: the "
+                "fused ingest key (|skey| <= 2n^2-1) would overflow int64"
+            )
         if config is not None:  # unified config surface (config.SketchConfig)
             seed, variant, samples_factor = (
                 config.seed,
@@ -172,51 +185,12 @@ class SketchCC:
 
     # ------------------------------------------------------------------ build
 
-    def updates_from_stream(self, stream: DataFrame) -> DataFrame:
-        """(seq,type,src,dst) → (vertex, eid, net) with JVM-side pre-aggregation.
-
-        This is the semantic contract (and test/oracle view) of one stream
-        slice; the ingest hot path is packed_updates, which computes the same
-        net rows with its exchange placed before the aggregation.
-
-        Stream contract (validated, not assumed): updates of one edge must
-        alternate insert/delete — exactly what the reference asserts on its
-        stream readers (a delete of a dead edge / re-insert of a live edge is
-        malformed there too). Under that contract the signed sum per
-        (vertex, edge) over ANY stream slice lies in {-1, 0, +1} and equals
-        the slice's occurrence-parity contribution, which is what makes
-        toggle semantics compose with the linear merge of micro-batch deltas
-        (an insert in batch k cancels a delete in batch k+1 bucket-for-bucket
-        when the states merge — the role XOR plays in the reference). The
-        |net| > 1 guard catches malformed updates WITHIN one stream slice; a
-        malformation split across separately built slices (e.g. two inserts of
-        one edge in different micro-batches, each netting +1) is invisible to
-        it and corrupts the merged state — cross-batch well-formedness is the
-        producer's contract, exactly as the reference's stream readers assume
-        an alternating stream per edge. Each undirected update hits both endpoints (the
-        reference's double gutter insert, graph_sketch_driver.h:171-172) with
-        the AGM signed-incidence convention: +eid at the lo endpoint, -eid at
-        the hi endpoint — so summing a supernode's member sketches cancels
-        internal edges exactly. All of this collapses in the JVM partial agg
-        before any Python runs.
-        """
-        n = self.num_vertices
-        canon = self._canonical_updates(stream)
-        eid = (F.col("lo") * F.lit(n) + F.col("hi")).alias("eid")
-        both = canon.select(F.col("lo").alias("vertex"), eid, "sign").unionAll(
-            canon.select(
-                F.col("hi").alias("vertex"), eid, (-F.col("sign")).alias("sign")
-            )
-        )
-        net = both.groupBy("vertex", "eid").agg(F.sum("sign").alias("net"))
-        return net.where(self._net_guard())
-
     @staticmethod
     def _canonical_updates(stream: DataFrame) -> DataFrame:
         """(lo, hi, sign) canonical undirected updates — the single shared
         definition of edge canonicalization and the insert/delete sign
-        convention (any change here reaches both the semantic/oracle view
-        and the ingest hot path)."""
+        convention (the ingest hot path and the streaming driver's parity
+        table both build on it)."""
         return stream.select(
             F.least("src", "dst").alias("lo"),
             F.greatest("src", "dst").alias("hi"),
@@ -227,7 +201,21 @@ class SketchCC:
     def _net_guard():
         """Keep net != 0 rows; raise on |net| > 1 (non-alternating stream) —
         the single shared definition of the stream-contract guard. Expects
-        columns `net` and `eid` in scope."""
+        columns `net` and `eid` in scope.
+
+        Stream contract (validated, not assumed): updates of one edge must
+        alternate insert/delete — exactly what the reference asserts on its
+        stream readers. Under that contract the signed sum per (vertex,
+        edge) over ANY stream slice lies in {-1, 0, +1} and equals the
+        slice's occurrence-parity contribution, which is what makes toggle
+        semantics compose with the linear merge of micro-batch deltas (an
+        insert in batch k cancels a delete in batch k+1 bucket-for-bucket
+        when the states merge — the role XOR plays in the reference). The
+        guard catches malformed updates WITHIN one stream slice; a
+        malformation split across separately built slices (two inserts of
+        one edge in different micro-batches, each netting +1) is invisible
+        to it — cross-batch well-formedness is the producer's contract, as
+        the reference's stream readers assume."""
         return F.when(
             F.abs("net") > 1,
             F.raise_error(
@@ -238,79 +226,45 @@ class SketchCC:
             ).cast("boolean"),
         ).otherwise(F.col("net") != 0)
 
-    def packed_updates(self, stream: DataFrame) -> DataFrame:
-        """(vertex, seid) net updates, hash-partitioned by vertex — the build
-        shuffle's 16-byte row format (sign folded into the edge id; eid >= 1
-        always).
-
-        The ingest path's ONE full-width exchange happens here, BEFORE the
-        net-multiplicity aggregation: hashpartitioning(vertex) satisfies the
-        (vertex, eid) clustered distribution, so the groupBy that collapses
-        duplicate updates runs partition-local with no second exchange. The
-        round-3 plan aggregated first (exchange on (vertex, eid)) and then
-        repartitioned by vertex — two exchanges; collapsing them measured
-        11.9s → 9.5s best (and an ~8x tighter run spread) on the kron_17
-        31.6M-update ingest at local[32]. Skew note: a hub vertex now
-        concentrates its GROSS update rows (not just net) on one reducer,
-        but the reference's alternating-stream contract bounds gross at a
-        small multiple of net, and the per-partition aggregation is
-        vectorized JVM code either way."""
-        part = self._partitioned_updates(stream)
-        net = part.groupBy("vertex", F.abs("seid").alias("eid")).agg(
-            F.sum(F.when(F.col("seid") > 0, F.lit(1)).otherwise(F.lit(-1))).alias("net")
-        )
-        guarded = net.where(self._net_guard())
-        return guarded.select("vertex", (F.col("net") * F.col("eid")).alias("seid"))
-
-    def _partitioned_updates(self, stream: DataFrame) -> DataFrame:
-        """(vertex, seid) GROSS signed incidence rows, hash-partitioned by
-        vertex — the build shuffle WITHOUT the net aggregation (build_state
-        nets in numpy inside the build stage; packed_updates layers the JVM
-        aggregation on top for consumers that want net rows as a table)."""
-        n = self.num_vertices
-        canon = self._canonical_updates(stream)
-        seid = F.col("sign") * (F.col("lo") * F.lit(n) + F.col("hi"))
-        # ONE generator scan (inline of a 2-struct array), not a unionAll of
-        # two selects: the union form scanned the stream parquet (and computed
-        # the canonicalization) twice per materialization — the same lesson as
-        # functions/edges.bidirect, applied to the ingest hot path (measured
-        # ~0.25s of the kron_17 exchange stage at local[32])
-        both = canon.select(
-            F.inline(
-                F.array(
-                    F.struct(F.col("lo").alias("vertex"), seid.alias("seid")),
-                    F.struct(F.col("hi").alias("vertex"), (-seid).alias("seid")),
-                )
-            )
-        )
-        return both.repartition(self.num_partitions, "vertex")
-
     def _packed_skeys(self, stream: DataFrame) -> DataFrame:
-        """One-column net updates for the build hot path: ``o`` int64 rows,
-        hash-partitioned by vertex, carrying the SAME information as
-        packed_updates' (vertex, seid) — the vertex is recomputed from the
-        edge id instead of shipped.
+        """One-column net updates for the build: ``o`` int64 rows,
+        hash-partitioned by vertex.
+
+        Each undirected update hits both endpoints (the reference's double
+        gutter insert, graph_sketch_driver.h:171-172) with the AGM
+        signed-incidence convention: +eid at the lo endpoint, -eid at the hi
+        endpoint — so summing a supernode's member sketches cancels internal
+        edges exactly.
 
         Encoding: a gross incidence row is ``skey = u * (eid*2 + is_hi)``
         where u is the update sign, eid = lo*n + hi, and is_hi says which
         endpoint this row is for (the vertex is then lo or hi of eid — 1
-        redundant bit instead of a redundant 8-byte column). After the
+        redundant bit instead of a redundant 8-byte vertex column). After the
         per-(endpoint, edge) net aggregation, ``o = seid_sign * (eid*2 +
-        is_hi)`` with seid_sign = net * (+1 at lo / -1 at hi), i.e. exactly
-        packed_updates' AGM-signed net rows in one column. Why (guide §2.3,
-        §4.1): the build exchange ships 16-byte UnsafeRows instead of
-        24-byte two-column rows (-33% shuffle bytes on the ingest's ONE
+        is_hi)`` with seid_sign = net * (+1 at lo / -1 at hi). Why (guide
+        §2.3, §4.1): the build exchange ships 16-byte UnsafeRows instead of
+        24-byte (vertex, seid) rows (-33% shuffle bytes on the ingest's ONE
         full-width exchange) and the Arrow boundary crosses 8 bytes/row
         instead of 16 — kron_17 interleaved A/B over 8 pairs: fused best
-        6.59s / median ~7.2 vs two-col best 7.10 / median ~8.6, with a
-        byte-identical state (bit_xor checksum over (vertex, det, grp)
-        equal) and visibly smaller stall exposure (max 10.2s vs 20.0s under
-        co-tenant bursts). All decode arithmetic is exact integer ops
-        (shiftright / div / %): float division would silently lose
-        precision past 2^53. Gated on FUSED_KEY_MAX_N."""
+        6.59s / median ~7.2 vs two-column best 7.10 / median ~8.6. All
+        decode arithmetic is exact integer ops (shiftright / div / %): float
+        division would silently lose precision past 2^53. |skey| <= 2n^2-1
+        bounds the universe at MAX_NUM_VERTICES (checked in __init__).
+
+        The ONE full-width exchange happens BEFORE the net-multiplicity
+        aggregation: hashpartitioning(vertex) satisfies the aggregation's
+        clustered distribution, so the groupBy that collapses duplicate
+        updates runs partition-local with no second exchange (collapsing the
+        round-3 plan's two exchanges measured 11.9s → 9.5s best on the
+        kron_17 ingest at local[32]). A hub vertex concentrates its GROSS
+        update rows on one reducer, but the alternating-stream contract
+        bounds gross at a small multiple of net."""
         n = self.num_vertices
         canon = self._canonical_updates(stream)
         eid2 = (F.col("lo") * F.lit(n) + F.col("hi")) * F.lit(2)
+        # ONE generator scan (inline of a 2-struct array), not a unionAll of
+        # two selects: the union form scanned the stream parquet (and
+        # computed the canonicalization) twice per materialization
         both = canon.select(
             F.inline(
                 F.array(
@@ -345,42 +299,31 @@ class SketchCC:
     def build_state(self, stream: DataFrame) -> DataFrame:
         """Build the (vertex, det, grp) state table from a full stream slice.
 
-        The JVM net-multiplicity aggregation between the exchange and the
-        python stage stays DELIBERATELY (round-8 interleaved A/B): the Arrow
-        boundary charges per row, and netting cuts the rows crossing it 3x
-        at kron_17 (63M gross -> 21M net) — moving the netting into numpy
-        (sort + segmented reduce, body measured at 0.29s/partition) still
-        lost ~6s end-to-end to the extra 42M rows of Arrow serialization
-        (old best 7.2s / median 8.6 vs new 13.1/18.7).
-
-        For num_vertices <= FUSED_KEY_MAX_N the exchange + Arrow rows are
-        the fused one-column encoding (_packed_skeys); the state produced is
-        byte-identical either way (checksum-pinned regression test)."""
+        The exchange + Arrow rows are the fused one-column key
+        (_packed_skeys). The JVM net-multiplicity aggregation between the
+        exchange and the python stage stays DELIBERATELY (round-8
+        interleaved A/B): the Arrow boundary charges per row, and netting
+        cuts the rows crossing it 3x at kron_17 (63M gross -> 21M net) —
+        moving the netting into numpy (sort + segmented reduce, body
+        measured at 0.29s/partition) still lost ~6s end-to-end to the extra
+        42M rows of Arrow serialization (old best 7.2s / median 8.6 vs new
+        13.1/18.7)."""
         geom = self.geom
         n = self.num_vertices
         gsz = geom.cols_per_sample * geom.bkt_per_col
         n_groups = geom.num_samples
-        fused = n <= FUSED_KEY_MAX_N
-        # both inputs are already hash-partitioned by vertex
-        updates = self._packed_skeys(stream) if fused else self.packed_updates(stream)
+        updates = self._packed_skeys(stream)  # hash-partitioned by vertex
 
         def _build(batches):
             for pdf in _concat(batches):
-                if fused:
-                    o = pdf["o"].to_numpy(np.int64)
-                    signs = np.where(o >= 0, np.int64(1), np.int64(-1))
-                    akey = np.abs(o).astype(np.uint64)
-                    eids = akey >> np.uint64(1)
-                    is_hi = (akey & np.uint64(1)).astype(bool)
-                    lo = (eids // np.uint64(n)).astype(np.int64)
-                    hi = (eids % np.uint64(n)).astype(np.int64)
-                    verts = np.where(is_hi, hi, lo)
-                else:
-                    verts = pdf["vertex"].to_numpy(np.int64)
-                    seid = pdf["seid"].to_numpy(np.int64)
-                    signs = np.where(seid >= 0, np.int64(1), np.int64(-1))
-                    eids = np.abs(seid).astype(np.uint64)
-                uniq, inv = np.unique(verts, return_inverse=True)
+                o = pdf["o"].to_numpy(np.int64)
+                signs = np.where(o >= 0, np.int64(1), np.int64(-1))
+                akey = np.abs(o).astype(np.uint64)
+                eids = akey >> np.uint64(1)
+                is_hi = (akey & np.uint64(1)).astype(bool)
+                lo = (eids // np.uint64(n)).astype(np.int64)
+                hi = (eids % np.uint64(n)).astype(np.int64)
+                uniq, inv = np.unique(np.where(is_hi, hi, lo), return_inverse=True)
                 sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
                 sm.update_many(inv, eids, signs=signs)
                 dets, grps = encode_group_rows(sm.buckets, gsz, n_groups)
@@ -445,413 +388,70 @@ class SketchCC:
             "vertex", "det", F.slice("grp", group_lo + 1, k).alias("grp")
         ).coalesce(self._query_parts())
 
-    def boruvka(
+    def _reduce(
         self,
         state: DataFrame,
-        max_rounds: int | None = None,
-        driver_finish_bytes: int = 256 * 1024 * 1024,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Run Boruvka over the sketch state.
+        labels_df: DataFrame | None,
+        group_lo: int,
+        group_hi: int,
+        sample: bool = True,
+    ) -> DataFrame:
+        """The one Boruvka-round reduce: per-component sums of sample groups
+        [group_lo, group_hi) (reference perform_boruvka_round).
 
-        Returns (labels: int64[num_vertices] — component = min member id,
-        forest: (m,2) int64 spanning-forest edges).
+        With a (vertex, root) labels_df, each sketch is pruned to those
+        groups' columns JVM-side (_sliced — the pruned bytes never cross the
+        Arrow boundary), inner-joined to its root (components absent from
+        labels_df never enter the round), partial-summed per (map partition,
+        root) in the grouped-SPARSE layout, exchanged on root, and
+        final-summed — a giant component never concentrates more rows on one
+        reducer than there are map partitions, and no per-root Python calls
+        happen anywhere. labels_df=None is the identity labeling (every
+        state vertex its own component, reference run_round_zero): one
+        pruned map pass with no join, aggregation or shuffle — at web scale
+        the generic path would ship a dense slice per VERTEX here.
 
-        Once the per-component slices for all *remaining* sample groups fit in
-        `driver_finish_bytes`, the tail rounds are finished driver-side in
-        numpy from one final collect — components shrink geometrically, so
-        this removes the long tail of per-round Spark jobs while keeping
-        driver memory bounded (the reference's whole query is in-memory; we
-        only drop down when it provably fits).
-        """
-        from graphzeppelin_spark.session import aqe_off
-
-        with aqe_off(self.spark):
-            return self._boruvka_impl(state, max_rounds, driver_finish_bytes)
-
-    def _boruvka_impl(
-        self,
-        state: DataFrame,
-        max_rounds: int | None,
-        driver_finish_bytes: int,
-    ) -> tuple[np.ndarray, np.ndarray]:
-        g = self.geom
-        n = self.num_vertices
-        budget = g.num_samples if max_rounds is None else min(max_rounds, g.num_samples)
-        dsu = NumpyDSU(n)
-        forest: list[tuple[int, int]] = []
-        # persist only if the CALLER hasn't: persist() on an already-cached
-        # plan is a no-op, so unconditionally unpersisting at the end would
-        # silently drop the caller's cache — every later query on that state
-        # then re-runs the whole sketch build (measured at kron_19: back-to-
-        # back boruvka calls went 30s → 140s, ~7x python-worker CPU; this
-        # WAS the bulk of the "late-session tax" on repeated CC queries)
-        from pyspark import StorageLevel
-
-        owns_cache = state.storageLevel == StorageLevel.NONE
-        if owns_cache:
-            state = state.persist()
-            state.count()
-
-        def _apply_edges(lo: np.ndarray, hi: np.ndarray) -> int:
-            # vectorized bulk union (round 0 applies ~one edge per vertex —
-            # the per-edge python find() loop here was ~1.5-2s of the kron_17
-            # CC query; union_edges_bulk is a few numpy passes). The applied
-            # tree-edge set is a valid spanning forest of the sampled edges
-            # (dsu.py docstring); labels are identical to sequential replay.
-            applied = dsu.union_edges_bulk(lo, hi)
-            if applied.any():
-                forest.extend(
-                    zip(lo[applied].tolist(), hi[applied].tolist())
-                )
-            return int(applied.sum())
-
-        slice_bytes_per_group = (g.cols_per_sample * g.bkt_per_col + 1) * 16
-        active: np.ndarray | None = None  # roots that may still have cut edges
-        rnd = 0  # round counter (stats / flow); gidx tracks groups consumed
-        gidx = 0
-        import time as _time
-
-        rounds_stats: list[dict] = []
-        self.last_boruvka_stats = {"rounds": rounds_stats, "driver_finish_round": None}
-        t_round = _time.time()
-        while gidx < budget:
-            labels = dsu.labels()
-            if rnd > 0 and active is not None:
-                # map last round's active roots through the merges; ZERO
-                # components dropped permanently (their sketches are empty —
-                # no cut edges can ever appear without new stream updates)
-                active = np.unique(labels[active])
-                remaining = budget - gidx
-                if len(active) == 0:
-                    break
-                # exact collected size: _finish_driver_side pre-reduces per
-                # root distributively AND collects at most FINISH_BATCH_GROUPS
-                # groups per batch, so the driver receives exactly one slice
-                # row per active component per batch — the gate therefore
-                # bounds the per-batch collect, which lets the finish engage
-                # with more components still active (fewer sequential
-                # distributed rounds; batching keeps the memory bound)
-                batch_est = min(remaining, FINISH_BATCH_GROUPS)
-                if len(active) * batch_est * slice_bytes_per_group <= driver_finish_bytes:
-                    self.last_boruvka_stats["driver_finish_round"] = rnd
-                    self.last_boruvka_stats["driver_finish_components"] = len(active)
-                    self._finish_driver_side(
-                        state, labels, active, gidx, budget, dsu, forest,
-                        _apply_edges, driver_finish_bytes=driver_finish_bytes,
-                    )
-                    rounds_stats.append(
-                        {"round": rnd, "kind": "driver_finish",
-                         "active": len(active),
-                         "sec": round(_time.time() - t_round, 3)}
-                    )
-                    break
-            if rnd == 0:
-                # round 0 samples ROUND0_GROUPS fresh groups of every
-                # vertex's own sketch in the same map pass: a second group
-                # costs nothing extra (identical transfer/decode shape) and
-                # collapses the post-round-0 active set dramatically — at
-                # kron_17, 2406 active components after 1 group vs 21 after
-                # 2 at the same 0.6-0.7s round cost — so the driver finish
-                # starts from a near-converged partition
-                k0 = min(ROUND0_GROUPS, budget)
-                sampled = self._sample_round0(state, k0)
-                gidx += k0
-            else:
-                sampled = self._sample_round(state, labels, gidx, gidx + 1, active)
-                gidx += 1
-            nonzero = sampled[sampled["status"] != ZERO]
-            active = np.unique(nonzero["root"].to_numpy(np.int64))
-            good = nonzero[nonzero["status"] == GOOD]
-            merged = 0
-            if len(good) > 0:
-                eids = good["eid"].to_numpy(np.uint64)
-                lo, hi = decode_edges(eids, n)
-                valid = (lo >= 0) & (lo < hi) & (hi < n)  # checksum false-positive guard
-                merged = _apply_edges(lo[valid], hi[valid])
-            rounds_stats.append(
-                {"round": rnd, "kind": "distributed", "active": int(len(active)),
-                 "good_samples": int(len(good)), "merged": int(merged),
-                 "sec": round(_time.time() - t_round, 3)}
-            )
-            t_round = _time.time()
-            if merged == 0:
-                break
-            rnd += 1
-        if owns_cache:
-            state.unpersist()
-        fa = np.array(forest, dtype=np.int64).reshape(-1, 2)
-        return dsu.labels(), fa
-
-    def _reduced_slices(
-        self, state: DataFrame, labels_df: DataFrame, group_lo: int, group_hi: int
-    ) -> tuple[DataFrame, int]:
-        """(root, sketch) — per-component sums of sample groups
-        [group_lo, group_hi) plus the deterministic bucket (last slot), as
-        fixed-width dense blobs for the driver's numpy accumulator. Two
-        vectorized stages: per-map-partition partial sums (emitted in the
-        grouped-SPARSE layout, so the exchange ships ~nnz*18 bytes per root
-        instead of a dense slice), then a repartition(root) exchange and a
-        final per-partition sum — a giant component never concentrates more
-        rows on one reducer than there are map partitions, and no per-root
-        Python function calls happen anywhere. The input is pruned JVM-side
-        (_sliced), so only the requested groups' bytes cross into Python."""
+        The final stage either l0-samples every group in the UDF
+        (SAMPLE_SCHEMA rows: one per component per group — sampling k fresh
+        groups against one partition is k classic rounds' worth of samples
+        for ONE reduce) or, with sample=False, emits one dense slice per
+        component (PARTIAL_SCHEMA) for the driver finish."""
         g = self.geom
         k = group_hi - group_lo
         gsz = g.cols_per_sample * g.bkt_per_col
         slice_nb = k * gsz + 1
-        joined = self._sliced(state, group_lo, group_hi).join(
-            labels_df, "vertex"
-        ).select("root", "det", "grp")
+        slice_geom = _SliceGeom(g, slice_nb, k)
+        identity = labels_df is None
 
-        def _partial(batches):
-            for pdf in _concat(batches):
-                roots = pdf["root"].to_numpy(np.int64)
-                arr = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                    reuse_slot="gdec_partial",
-                )
-                uniq, inv = np.unique(roots, return_inverse=True)
-                out = cached_zero_buckets(slice_nb, len(uniq), "gacc_partial")
-                with np.errstate(over="ignore"):
-                    np.add.at(out, inv, arr)
-                dets, grps = encode_group_rows(out, gsz, k)
-                yield pd.DataFrame({"root": uniq, "det": dets, "grp": grps})
-
-        def _final(batches):
-            for pdf in _concat(batches):
-                roots = pdf["root"].to_numpy(np.int64)
-                mats = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                    reuse_slot="gdec_final",
-                )
-                uniq, inv = np.unique(roots, return_inverse=True)
-                acc = cached_zero_buckets(slice_nb, len(uniq), "gacc_final")
-                with np.errstate(over="ignore"):
-                    np.add.at(acc, inv, mats)
-                flat = acc.reshape(len(uniq), -1)
-                yield pd.DataFrame(
-                    {"root": uniq, "sketch": [flat[i].tobytes() for i in range(len(uniq))]}
-                )
-
-        reduced = (
-            joined.mapInPandas(_partial, schema=GROUPED_PARTIAL_SCHEMA)
-            .repartition(self._query_parts(), "root")
-            .mapInPandas(_final, schema=PARTIAL_SCHEMA)
-        )
-        return reduced, slice_nb
-
-    def _finish_driver_side(
-        self,
-        state: DataFrame,
-        labels: np.ndarray,
-        active: np.ndarray,
-        start_round: int,
-        budget: int,
-        dsu: NumpyDSU,
-        forest: list,
-        apply_edges,
-        batch_groups: int = FINISH_BATCH_GROUPS,
-        driver_finish_bytes: int = 256 * 1024 * 1024,
-    ) -> int:
-        """Collect per-component slices for the remaining sample groups (a
-        distributed two-stage reduce + one collect per BATCH) and run the
-        remaining Boruvka rounds in pure numpy (reference
-        cc_sketch_alg.cpp:464-513 analog). Each collect is exactly one row
-        per currently-active component — the groupBy(root) reduce runs
-        distributed first, so the gate estimate in boruvka() is the true
-        collected size.
-
-        Groups are collected in fixed narrow batches (FINISH_BATCH_GROUPS),
-        not all-remaining at once: wide batches pay in full-state decode
-        width, driver collect bytes and GC, while a narrow batch almost
-        always converges the tail anyway (see the constant's A/B numbers).
-        A later batch, when needed at all, reduces over the contracted
-        (much smaller) active set; its per-component sums are identical to
-        the one-shot collect because the slice aggregation commutes with
-        DSU contraction (linear sketch)."""
-        g = self.geom
-        n = self.num_vertices
-        slice_bytes_per_group = (g.cols_per_sample * g.bkt_per_col + 1) * 16
-        total_merged = 0
-        gi_abs = start_round
-        act = np.asarray(active, dtype=np.int64)
-        while gi_abs < budget and len(act) > 1:
-            # fixed narrow batches: the reduce scans and decodes the WHOLE
-            # state at the batch's width regardless of how few components
-            # are active, so widening the batch when the collect estimate
-            # is permissive still pays full-state decode cost — 3-group
-            # batches measured best-or-tied at every probed regime
-            # (kron_17 at 2406 and 21 active, the sf0.1 chain at 5165,
-            # kron_21 at 305: finish 9.1s vs 13.5s for 3 vs 6 groups)
-            kb = min(budget - gi_abs, batch_groups)
-            labels_now = dsu.labels()
-            act = np.unique(labels_now[act])  # contract through merges so far
-            if len(act) <= 1:
-                break
-            labels_df = self._labels_df(labels_now, act)
-            reduced, slice_nb = self._reduced_slices(
-                state, labels_df, gi_abs, gi_abs + kb
+        def _summed(pdf, slot):
+            roots = pdf["root"].to_numpy(np.int64)
+            arr = decode_group_rows(
+                pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
+                reuse_slot="gdec_" + slot,
             )
-            rows = reduced.collect()
-            if not rows:
-                break
-            comp_roots = np.array([r["root"] for r in rows], dtype=np.int64)
-            acc = np.frombuffer(
-                b"".join(r["sketch"] for r in rows), dtype=np.uint64
-            ).reshape(len(rows), slice_nb, 2).copy()
-            slice_geom = _SliceGeom(g, slice_nb, kb)
-            stop = False
-            for gi in range(kb):
-                sm = SketchMatrix(slice_geom, len(comp_roots), acc)
-                status, eid = sm.sample_many(gi)
-                goodm = status == GOOD
-                if goodm.any():
-                    lo, hi = decode_edges(eid[goodm].astype(np.uint64), n)
-                    valid = (lo >= 0) & (lo < hi) & (hi < n)
-                    merged = apply_edges(lo[valid], hi[valid])
-                else:
-                    merged = 0
-                total_merged += merged
-                if merged == 0:
-                    # no progress this group: with goodm empty nothing can
-                    # ever merge again; with goodm all-redundant the sampled
-                    # edges were internal to already-merged components and
-                    # the contraction below would be a no-op — both cases
-                    # terminated the unbatched loop too
-                    stop = True
-                    break
-                # re-contract: combine slices of components merged this round
-                new_labels = dsu.labels()
-                new_roots = new_labels[comp_roots]
-                uniq2, inv2 = np.unique(new_roots, return_inverse=True)
-                acc2 = np.zeros((len(uniq2), slice_nb, 2), dtype=np.uint64)
-                with np.errstate(over="ignore"):
-                    np.add.at(acc2, inv2, acc)
-                acc, comp_roots = acc2, uniq2
-                if len(comp_roots) <= 1:
-                    stop = True
-                    break
-            gi_abs += kb
-            if stop:
-                break
-        return total_merged
-
-    def _sampled_vertices(
-        self, state: DataFrame, group_lo: int, group_hi: int
-    ) -> DataFrame:
-        """(root=vertex, grp, status, eid) for sample groups
-        [group_lo, group_hi) of every vertex's OWN sketch — the no-shuffle,
-        no-join sampler for rounds where the label map is the identity
-        (every vertex its own component): one map pass over the JVM-pruned
-        group slice (_sliced), no aggregation. At web scale this round would
-        otherwise be the most expensive one — every vertex is an "active
-        component", so the generic path's dense per-root slice shuffle is
-        Θ(vertices x slice bytes)."""
-        geom = self.geom
-        k = group_hi - group_lo
-        gsz = geom.cols_per_sample * geom.bkt_per_col
-        slice_nb = k * gsz + 1
-        slice_geom = _SliceGeom(geom, slice_nb, k)
-        sliced = self._sliced(state, group_lo, group_hi)
-
-        def _sample(batches):
-            for pdf in _concat(batches):
-                arr = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                    reuse_slot="gdec_sample",
-                )
-                sm = SketchMatrix(slice_geom, len(arr), arr)
-                verts = pdf["vertex"].to_numpy(np.int64)
-                frames = []
-                for gi in range(k):
-                    status, eid = sm.sample_many(gi)
-                    eid[status != GOOD] = 0
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "root": verts,
-                                "grp": np.full(len(arr), group_lo + gi, np.int32),
-                                "status": status.astype(np.int32),
-                                "eid": _u64_col_to_i64(eid),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-
-        return sliced.mapInPandas(_sample, schema=SAMPLE_SCHEMA)
-
-    def _sample_round0(self, state: DataFrame, k0: int = 1) -> pd.DataFrame:
-        """Round 0 of the driver-DSU fast path: sample every vertex's own
-        sketch (cc_sketch_alg.cpp:223-244 analog) — no shuffle at all.
-        k0 > 1 consumes that many fresh sample groups in the one map pass."""
-        out = self._sampled_vertices(state, 0, k0)
-        # non-ZERO rows only: ZERO rows are isolated vertices (usually most
-        # of a web graph) and are excluded from every subsequent round
-        pdf = out.where(F.col("status") != ZERO).toPandas()
-        pdf["eid"] = pdf["eid"].astype(np.int64).to_numpy().view(np.uint64)
-        return pdf
-
-    def _labels_df(self, labels: np.ndarray, active: np.ndarray | None):
-        """Broadcastable (vertex, root) map, restricted to active components."""
-        verts = np.arange(len(labels), dtype=np.int64)
-        if active is not None:
-            mask = np.isin(labels, active)
-            verts, roots = verts[mask], labels[mask]
-        else:
-            roots = labels
-        return F.broadcast(
-            self.spark.createDataFrame(pd.DataFrame({"vertex": verts, "root": roots}))
-        )
-
-    def _sampled_components(
-        self, state: DataFrame, labels_df: DataFrame, group_lo: int, group_hi: int
-    ) -> DataFrame:
-        """(root, grp, status, eid) DataFrame — one l0-sample per component
-        per sample group in [group_lo, group_hi): prune each sketch to those
-        groups' columns JVM-side (_sliced — the pruned bytes never cross the
-        Arrow boundary), partial-sum per (partition, root) emitting
-        grouped-SPARSE partials, exchange on root, then one vectorized
-        final-sum + per-group sample over every root in the partition — no
-        per-root Python calls. Components absent from labels_df never enter
-        the round at all (the join is inner). Sampling k fresh groups against
-        one component partition is statistically equivalent to k classic
-        rounds' worth of samples and costs ONE distributed reduce instead of
-        k."""
-        geom = self.geom
-        k = group_hi - group_lo
-        gsz = geom.cols_per_sample * geom.bkt_per_col
-        slice_nb = k * gsz + 1
-        joined = self._sliced(state, group_lo, group_hi).join(
-            labels_df, "vertex"
-        ).select("root", "det", "grp")
+            if identity:  # state rows are already one per vertex
+                return roots, arr
+            uniq, inv = np.unique(roots, return_inverse=True)
+            acc = cached_zero_buckets(slice_nb, len(uniq), "gacc_" + slot)
+            with np.errstate(over="ignore"):
+                np.add.at(acc, inv, arr)
+            return uniq, acc
 
         def _partial(batches):
             for pdf in _concat(batches):
-                roots = pdf["root"].to_numpy(np.int64)
-                arr = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                    reuse_slot="gdec_partial",
-                )
-                uniq, inv = np.unique(roots, return_inverse=True)
-                out = cached_zero_buckets(slice_nb, len(uniq), "gacc_partial")
-                with np.errstate(over="ignore"):
-                    np.add.at(out, inv, arr)
-                dets, grps = encode_group_rows(out, gsz, k)
+                uniq, acc = _summed(pdf, "partial")
+                dets, grps = encode_group_rows(acc, gsz, k)
                 yield pd.DataFrame({"root": uniq, "det": dets, "grp": grps})
-
-        slice_geom = _SliceGeom(geom, slice_nb, k)
 
         def _final(batches):
             for pdf in _concat(batches):
-                roots = pdf["root"].to_numpy(np.int64)
-                mats = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                    reuse_slot="gdec_final",
-                )
-                uniq, inv = np.unique(roots, return_inverse=True)
-                acc = cached_zero_buckets(slice_nb, len(uniq), "gacc_final")
-                with np.errstate(over="ignore"):
-                    np.add.at(acc, inv, mats)
+                uniq, acc = _summed(pdf, "final")
+                if not sample:
+                    flat = acc.reshape(len(uniq), -1)
+                    yield pd.DataFrame(
+                        {"root": uniq, "sketch": [row.tobytes() for row in flat]}
+                    )
+                    continue
                 sm = SketchMatrix(slice_geom, len(uniq), acc)
                 frames = []
                 for gi in range(k):
@@ -869,30 +469,133 @@ class SketchCC:
                     )
                 yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
-        return (
-            joined.mapInPandas(_partial, schema=GROUPED_PARTIAL_SCHEMA)
-            .repartition(self._query_parts(), "root")
-            .mapInPandas(_final, schema=SAMPLE_SCHEMA)
+        rows = self._sliced(state, group_lo, group_hi)
+        if identity:
+            rows = rows.withColumnRenamed("vertex", "root")
+        else:
+            rows = (
+                rows.join(labels_df, "vertex").select("root", "det", "grp")
+                .mapInPandas(_partial, schema=GROUPED_PARTIAL_SCHEMA)
+                .repartition(self._query_parts(), "root")
+            )
+        return rows.mapInPandas(_final, schema=SAMPLE_SCHEMA if sample else PARTIAL_SCHEMA)
+
+    def _labels_df(self, labels: np.ndarray, active: np.ndarray | None):
+        """Broadcastable (vertex, root) map, restricted to active components."""
+        verts = np.arange(len(labels), dtype=np.int64)
+        if active is not None:
+            mask = np.isin(labels, active)
+            verts, roots = verts[mask], labels[mask]
+        else:
+            roots = labels
+        return F.broadcast(
+            self.spark.createDataFrame(pd.DataFrame({"vertex": verts, "root": roots}))
         )
 
-    def _sample_round(
-        self,
-        state: DataFrame,
-        labels: np.ndarray,
-        group_lo: int,
-        group_hi: int,
-        active: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        """Driver-DSU fast path: collect the per-component samples (at most
-        one row per active component per group, geometrically shrinking)."""
-        out = self._sampled_components(
-            state, self._labels_df(labels, active), group_lo, group_hi
-        )
-        pdf = out.where(F.col("status") != ZERO).toPandas()
-        pdf["eid"] = pdf["eid"].astype(np.int64).to_numpy().view(np.uint64)
-        return pdf
+    def _boruvka(self, state: DataFrame, labels, max_rounds: int | None) -> None:
+        """The one Boruvka loop (reference boruvka_emulation,
+        cc_sketch_alg.cpp:464-513), shared by boruvka() and
+        connected_components_distributed(); `labels` is the entry point's
+        label store (_DriverLabels or _TableLabels), which picks each
+        round's width and where its samples are drawn and applied.
+
+        Stop rule: a component leaves the active set only when its sample is
+        ZERO — its sketch is empty, so it has no cut edges and never merges
+        again without new stream updates. A FAIL sample (non-empty sketch,
+        no good bucket in that group) keeps the component active, and the
+        next round draws fresh groups for it (the reference's
+        sample_supernode keeps the loop going on FAIL). The loop stops once
+        at most one active component is left: cut edges are symmetric, so a
+        lone active component's only partners are ZERO components, which
+        hold no cut edges by definition. If the sample budget runs out with
+        more than one component active, `exhausted` is set and a
+        RuntimeWarning raised: the labeling is then possibly under-merged
+        (never wrongly merged) and the caller should raise samples_factor.
+
+        Every round appends one record to last_boruvka_stats["rounds"]:
+        round, kind ("distributed" = sampled in a Spark UDF;
+        "driver_finish" = sampled in numpy from collected slices), k (sample
+        groups consumed), good/fail/zero_samples (one sample per component
+        per group), active (components sampled non-ZERO), active_after
+        (active components after the round's merges) and sec, plus the
+        store's own counters."""
+        budget = self.geom.num_samples
+        if max_rounds is not None:
+            budget = min(max_rounds, budget)
+        stats = {"rounds": [], "exhausted": False, "early_exit": False,
+                 "driver_finish_round": None, "driver_finish_components": None}
+        self.last_boruvka_stats = stats
+        gidx = 0
+        while gidx < budget and labels.active > 1:
+            t0 = time.time()
+            k, kind, samples = labels.sample(state, gidx, budget)
+            if kind == "driver_finish" and stats["driver_finish_round"] is None:
+                stats["driver_finish_round"] = len(stats["rounds"])
+                stats["driver_finish_components"] = labels.active
+            counts = labels.apply(samples)
+            good, fail = counts["good_samples"], counts["fail_samples"]
+            stats["rounds"].append(
+                {"round": len(stats["rounds"]), "kind": kind, "k": k,
+                 "active": (good + fail) // k, **counts,
+                 "active_after": labels.active,
+                 "sec": round(time.time() - t0, 3)}
+            )
+            gidx += k
+        # a lone active component was not confirmed by a further round
+        stats["early_exit"] = labels.active == 1
+        if labels.active > 1:
+            stats["exhausted"] = True
+            warnings.warn(
+                f"sketch CC: sample budget exhausted with ~{labels.active} "
+                "active components; labeling may be partial — raise "
+                "samples_factor (the budget scales with it)",
+                RuntimeWarning,
+                stacklevel=3,
+            )
 
     # ------------------------------------------------------------- public API
+
+    def boruvka(
+        self,
+        state: DataFrame,
+        max_rounds: int | None = None,
+        driver_finish_bytes: int = 256 * 1024 * 1024,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Run Boruvka over the sketch state with labels in a driver numpy
+        DSU (the fast path up to ~10^8 vertices).
+
+        Returns (labels: int64[num_vertices] — component = min member id,
+        forest: (m,2) int64 spanning-forest edges).
+
+        Once the per-component slices for the next FINISH_BATCH_GROUPS
+        sample groups fit in `driver_finish_bytes`, the tail rounds are
+        finished driver-side in numpy from one collect per batch —
+        components shrink geometrically, so this removes the long tail of
+        per-round Spark jobs while keeping driver memory bounded (the
+        reference's whole query is in-memory; we only drop down when it
+        provably fits). Per-round stats land in `last_boruvka_stats`.
+        """
+        from graphzeppelin_spark.session import aqe_off
+
+        labels = _DriverLabels(self, driver_finish_bytes)
+        with aqe_off(self.spark):
+            # persist only if the CALLER hasn't: persist() on an
+            # already-cached plan is a no-op, so unconditionally unpersisting
+            # at the end would silently drop the caller's cache — every later
+            # query on that state then re-runs the whole sketch build
+            # (measured at kron_19: back-to-back boruvka calls went 30s →
+            # 140s, ~7x python-worker CPU)
+            owns_cache = state.storageLevel == StorageLevel.NONE
+            if owns_cache:
+                state = state.persist()
+                state.count()
+            try:
+                self._boruvka(state, labels, max_rounds)
+            finally:
+                if owns_cache:
+                    state.unpersist()
+        forest = np.array(labels.forest, dtype=np.int64).reshape(-1, 2)
+        return labels.dsu.labels(), forest
 
     def connected_components(self, state: DataFrame) -> DataFrame:
         labels, _ = self.boruvka(state)
@@ -913,8 +616,7 @@ class SketchCC:
         """(vertex, component) with labels resident as a DataFrame end-to-end —
         the 10^9+-vertex path: no driver structure is ever Θ(num_vertices)
         (boruvka()'s numpy DSU + labels array is the fast path up to ~10^8).
-
-        Per Spark round (the sequential-latency unit this path is bound by):
+        The rounds are _boruvka's, with the labels in a _TableLabels store:
 
         1. sample k = groups_per_round FRESH sample groups per active
            component in ONE pruned two-stage reduce (k candidate cut edges
@@ -927,41 +629,27 @@ class SketchCC:
            otherwise the exact star-contraction operator
            (operators/connectivity.py) contracts it distributed. The gate
            is deliberately smaller than boruvka()'s 256MB driver-finish
-           gate — the economics differ: this path must collect, solve,
-           RE-UPLOAD the remap and broadcast it into the labels join,
-           while boruvka's finish keeps labels driver-side and uploads
-           nothing. A same-session interleaved A/B at kron_21's
-           5.4M-edge/87MB round-0 multigraph (BENCH/remap_gate_ab.json)
-           measured NO benefit from raising it (64MB: 182/202s; 256MB:
-           396/180s — the spread sits in the Boruvka confirmation passes,
-           identical either way), so the default stays at 64MB, which
-           skips the re-upload+broadcast risk entirely;
+           gate — this path must collect, solve, RE-UPLOAD the remap and
+           broadcast it into the labels join; a same-session interleaved
+           A/B at kron_21's 5.4M-edge/87MB round-0 multigraph
+           (BENCH/remap_gate_ab.json) measured NO benefit from raising it;
         4. one labels checkpoint applies the remap AND carries a per-vertex
-           `act` flag (old root sampled non-ZERO). ZERO components have empty
-           sketches — no incident cut edges — so they can never merge again
-           and a new component is active iff any member was (in fact all
-           members agree: ZERO components only ever merge with nobody), which
-           makes next round's active-component input a simple filter on the
-           labels table instead of a join against a separately checkpointed
-           active set.
+           `act` flag (old root sampled non-ZERO), so next round's input is
+           a filter on the labels table.
 
-        The loop terminates WITHOUT a confirmation round once at most one
-        active component remains: cut edges are symmetric, so a lone active
-        component's only potential merge partners are ZERO-sketched
-        components, which hold no cut edges by definition — a further
-        sampling pass can only return 0 edges. Because the per-round active
-        count is an approx_count_distinct estimate, small estimates (<=4)
-        are confirmed with one exact distinct-count over the checkpointed
-        labels table (cheap) before exiting; at kron_21 this removes two
-        full pruned state scans (~108s of a 192s run) that existed only to
-        observe the inevitable empty sample.
-
-        Contracting a k-edge-per-component graph collapses whole merge chains
-        in one round, so the sample budget is consumed in ceil(budget/k)
-        Spark rounds — at kron_17 this plus the fused active flag and the
-        checkpoint-then-count comp-edge materialization (the old
-        isEmpty()-then-recompute double join is gone) is what brings the
-        path's round overhead down toward the driver-DSU fast path.
+        Contracting a k-edge-per-component graph collapses whole merge
+        chains in one round, so the sample budget is consumed in
+        ceil(budget/k) Spark rounds. Budget accounting: the sketch budget
+        (num_samples ≈ 1.71·log2(n)·samples_factor) is derived for ONE fresh
+        group per classic Boruvka round, so k is ADAPTIVE: it drops toward 1
+        whenever the remaining budget could not finish single-group rounds
+        for the components still active (remaining − k < ceil(log2(active)),
+        active read off the labels checkpoint by observe(), no extra job).
+        The active count is an approx_count_distinct estimate; estimates
+        <= 4 are confirmed with one exact distinct-count over the
+        checkpointed labels table, so the stop at <= 1 active component is
+        exact (at kron_21 that stop removed two full pruned state scans,
+        ~108s of a 192s run, that only observed the inevitable empty sample).
 
         Vertices with no updates in the stream never appear in `state`; they
         are isolated singletons and are implicitly their own component.
@@ -971,225 +659,21 @@ class SketchCC:
         distributed, never collected — so every vertex in [0, n) gets a row,
         matching the reference's full-universe labeling
         (include/return_types.h:13-37, src/return_types.cpp:5-19) and the
-        driver-DSU path's `n_components` on the same graph.
-
-        Budget accounting (k = groups_per_round): the sketch budget
-        (num_samples ≈ 1.71·log2(n)·samples_factor) is derived for ONE fresh
-        group per classic Boruvka round; consuming k per round cuts the
-        worst-case round count to ceil(budget/k). Multi-edge contraction
-        usually compensates (a k-edge component multigraph collapses whole
-        merge chains per round), but it is not guaranteed to, so this path
-        is ADAPTIVE: after each round it reads an approximate active-
-        component count off the labels checkpoint's own materialization
-        (observe(), no extra job) and drops k toward 1 whenever the
-        remaining budget could not finish single-group rounds for the
-        components still active (remaining − k < ceil(log2(active))). If
-        the budget still exhausts with merges in progress, a RuntimeWarning
-        is raised and `last_distributed_stats['exhausted']` is set — the
-        labeling is then possibly partial (components under-merged, never
-        wrongly merged) and the caller should raise samples_factor.
-
-        Per-round timings/counts are recorded in `last_distributed_stats`."""
-        import math
-        import time as _time
-        import warnings
-
-        from pyspark.sql import Observation
-
-        from graphzeppelin_spark.operators.connectivity import connected_components_df
-        from graphzeppelin_spark.session import free_local_checkpoint
-
-        g = self.geom
-        n = self.num_vertices
-        budget = g.num_samples if max_rounds is None else min(max_rounds, g.num_samples)
-        k_default = groups_per_round or self.groups_per_round
-        labels = state.select(
-            "vertex", F.col("vertex").alias("root"), F.lit(True).alias("act")
-        ).localCheckpoint(eager=True)
-        prev_samples: DataFrame | None = None
-        gidx = 0
-        active_est: int | None = None  # approx active components, post-round
-        stats: list[dict] = []
-        self.last_distributed_stats = {"rounds": stats, "exhausted": False}
-        last_round_merged = False
-        while gidx < budget:
-            k = min(k_default, budget - gidx)
-            if active_est is not None and active_est > 1:
-                # stretch the tail of the budget: keep k only if, assuming
-                # this round achieves no more than one classic halving, the
-                # leftover budget could still finish one group at a time
-                reserve = math.ceil(math.log2(active_est))
-                if budget - gidx - k < reserve:
-                    k = max(1, min(k, budget - gidx - reserve))
-            t_round = _time.time()
-            first_round = gidx == 0
-            if first_round:
-                # identity label map: every vertex is its own component, so
-                # per-component sampling needs no join, no aggregation and
-                # no shuffle — the generic path would ship a dense slice
-                # per VERTEX through the exchange here (the most expensive
-                # round by far at web scale)
-                samples = self._sampled_vertices(state, 0, k)
-            else:
-                lbl_in = labels.where(F.col("act")).select("vertex", "root")
-                samples = self._sampled_components(state, lbl_in, gidx, gidx + k)
-            samples = samples.localCheckpoint(eager=True)
-            gidx += k
-            if prev_samples is not None:
-                free_local_checkpoint(prev_samples)
-            good = samples.where(F.col("status") == F.lit(int(GOOD)))
-            # endpoints of the sampled edges, lifted to component ids;
-            # dedupe across groups before the label joins
-            ends = good.select(
-                F.expr(f"eid div {n}").alias("lo"),
-                F.pmod("eid", F.lit(n)).cast("long").alias("hi"),
-            ).where(
-                (F.col("lo") >= 0) & (F.col("lo") < F.col("hi")) & (F.col("hi") < n)
-            ).distinct()
-            if first_round:
-                # identity labels: endpoints ARE the component ids
-                comp_edges = ends.select(
-                    F.col("lo").alias("src"), F.col("hi").alias("dst")
-                )
-            else:
-                lv = labels.select(F.col("vertex").alias("lo"), F.col("root").alias("ra"))
-                hv = labels.select(F.col("vertex").alias("hi"), F.col("root").alias("rb"))
-                comp_edges = (
-                    ends.join(lv, "lo")
-                    .join(hv, "hi")
-                    .where(F.col("ra") != F.col("rb"))
-                    .select(
-                        F.least("ra", "rb").alias("src"), F.greatest("ra", "rb").alias("dst")
-                    )
-                    .distinct()
-                )
-            # the edge count rides observe() on the checkpoint that
-            # materializes comp_edges anyway — no separate count job
-            ce_obs = Observation()
-            comp_edges = comp_edges.observe(
-                ce_obs, F.count(F.lit(1)).alias("m")
-            ).localCheckpoint(eager=True)
-            n_edges = int(ce_obs.get["m"])
-            if n_edges == 0:
-                free_local_checkpoint(comp_edges)
-                prev_samples = samples
-                last_round_merged = False
-                stats.append(
-                    {"round": len(stats), "k": k, "n_edges": 0,
-                     "active_est": active_est,
-                     "sec": round(_time.time() - t_round, 3)}
-                )
-                break
-            if n_edges * 16 <= remap_driver_bytes:
-                remap = self._remap_from_edges_driver(comp_edges)
-                remap = F.broadcast(remap)
-            else:
-                remap = connected_components_df(comp_edges).select(
-                    F.col("v").alias("root"), F.col("component").alias("new_root")
-                ).where(F.col("root") != F.col("new_root"))
-            nonzero = (
-                samples.where(F.col("status") != F.lit(int(ZERO)))
-                .select("root")
-                .distinct()
-                .withColumn("_nz", F.lit(True))
-            )
-            old_labels = labels
-            lbl_obs = Observation()
-            labels = (
-                labels.select("vertex", "root")
-                .join(remap, "root", "left")
-                .join(nonzero, "root", "left")
-                .select(
-                    "vertex",
-                    F.coalesce("new_root", "root").alias("root"),
-                    F.coalesce("_nz", F.lit(False)).alias("act"),
-                )
-                # next round's adaptive-k input, read off this checkpoint's
-                # own materialization: approximate count of distinct active
-                # roots (nulls — inactive vertices — are ignored)
-                .observe(
-                    lbl_obs,
-                    F.approx_count_distinct(
-                        F.when(F.col("act"), F.col("root"))
-                    ).alias("ac"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            active_est = int(lbl_obs.get["ac"])
-            free_local_checkpoint(old_labels)
-            free_local_checkpoint(comp_edges)
-            prev_samples = samples
-            last_round_merged = True
-            round_stat = {"round": len(stats), "k": k, "n_edges": n_edges,
-                          "active_est": active_est,
-                          "sec": round(_time.time() - t_round, 3)}
-            stats.append(round_stat)
-            # Exact early-exit at active <= 1: a lone active component cannot
-            # merge — cut edges are symmetric, so its only possible partners
-            # are ZERO-sketched components, and a ZERO sketch means an empty
-            # cut-edge set by definition. Running another sampling round to
-            # "confirm 0 edges" is therefore provably redundant (measured at
-            # kron_21: 2 full pruned state scans, ~108s of a 192s total, to
-            # recover 6-then-0 edges). active_est is approx_count_distinct
-            # (~2-5% error), so when the estimate is small we pay one cheap
-            # exact distinct-count over the just-checkpointed labels table
-            # before terminating; with >=2 active components a cross merge
-            # is still possible and the loop continues.
-            if active_est <= 4:
-                exact_active = (
-                    labels.where(F.col("act")).select("root").distinct().count()
-                )
-                round_stat["active_exact"] = int(exact_active)
-                if exact_active <= 1:
-                    round_stat["early_exit"] = True
-                    # termination is proved, not budget-bound: suppress the
-                    # exhausted path even if this was the final budgeted round
-                    last_round_merged = False
-                    break
-        if prev_samples is not None:
-            free_local_checkpoint(prev_samples)
-        if gidx >= budget and last_round_merged and (active_est or 0) > 1:
-            # the final round still found cut edges and >1 component remains
-            # active: the sample budget ran out mid-merge. Labels are
-            # consistent but possibly under-merged (never wrongly merged).
-            self.last_distributed_stats["exhausted"] = True
-            warnings.warn(
-                "connected_components_distributed: sample budget exhausted "
-                f"with ~{active_est} active components; labeling may be "
-                "partial — raise samples_factor (budget scales with it) or "
-                "lower groups_per_round",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        out = labels.select("vertex", F.col("root").alias("component"))
+        driver-DSU path's `n_components` on the same graph."""
+        labels = _TableLabels(
+            self, state, groups_per_round or self.groups_per_round, remap_driver_bytes
+        )
+        self._boruvka(state, labels, max_rounds)
+        out = labels.labels.select("vertex", F.col("root").alias("component"))
         if complete:
             untouched = (
-                self.spark.range(n)
+                self.spark.range(self.num_vertices)
                 .select(F.col("id").cast("long").alias("vertex"))
                 .join(out.select("vertex"), "vertex", "left_anti")
                 .select("vertex", F.col("vertex").alias("component"))
             )
             out = out.unionByName(untouched)
         return out
-
-    def _remap_from_edges_driver(self, comp_edges: DataFrame) -> DataFrame:
-        """(root, new_root) remap for a BOUNDED component-edge set, solved on
-        the driver in numpy (size gated by the caller on the actual edge
-        count, never Θ(num_vertices)). Labels are canonical (min component
-        id) because ids are sorted before the local DSU runs."""
-        pdf = comp_edges.toPandas()
-        src = pdf["src"].to_numpy(np.int64)
-        dst = pdf["dst"].to_numpy(np.int64)
-        ids = np.unique(np.concatenate([src, dst]))
-        local = NumpyDSU(len(ids))
-        local.union_edges_bulk(
-            np.searchsorted(ids, src), np.searchsorted(ids, dst)
-        )
-        new_root = ids[local.labels()]
-        changed = new_root != ids
-        return self.spark.createDataFrame(
-            pd.DataFrame({"root": ids[changed], "new_root": new_root[changed]})
-        )
 
     def spanning_forest(self, state: DataFrame) -> DataFrame:
         _, forest = self.boruvka(state)
@@ -1253,6 +737,245 @@ class SketchCC:
             ["component"],
             {"part": F.collect_list("v")},
             {"members": F.sort_array(F.flatten(F.collect_list("part")))},
+        )
+
+
+class _DriverLabels:
+    """boruvka()'s label store: a numpy DSU on the driver (the reference's
+    in-process DSU) plus the spanning forest of the sampled edges it
+    accepted.
+
+    Rounds: round 0 samples ROUND0_GROUPS groups of every vertex's own
+    sketch; later rounds sample one group of each active component in a
+    Spark reduce until the batched driver finish fits. The finish collects
+    one dense slice per active component for the next FINISH_BATCH_GROUPS
+    groups in one reduce + collect (exactly one row per component, so the
+    byte gate is the true collected size) and samples them in numpy one
+    group per round, combining the slices of components that merged
+    between rounds. The per-component sums equal a fresh reduce over the
+    contracted labels because slice aggregation commutes with DSU
+    contraction (linear sketch)."""
+
+    def __init__(self, alg: SketchCC, finish_bytes: int):
+        self.alg = alg
+        self.finish_bytes = finish_bytes
+        self.dsu = NumpyDSU(alg.num_vertices)
+        self.forest: list[tuple[int, int]] = []
+        self.roots: np.ndarray | None = None  # active roots; None: every vertex
+        # the driver finish's collected slices: [next group in the batch,
+        # batch width, component roots, dense (components, slice, 2) sums]
+        self.batch: list | None = None
+
+    @property
+    def active(self) -> float:
+        return math.inf if self.roots is None else len(self.roots)
+
+    def active_table(self) -> DataFrame | None:
+        if self.roots is None:
+            return None
+        return self.alg._labels_df(self.dsu.labels(), self.roots)
+
+    def _collect(self, samples: DataFrame):
+        """(root, status, eid) arrays of a Spark-sampled round: at most k
+        rows per component sampled, all statuses (ZERO rows included, so
+        the round's counts are exact)."""
+        pdf = samples.toPandas()
+        return (
+            pdf["root"].to_numpy(np.int64),
+            pdf["status"].to_numpy(np.int64),
+            pdf["eid"].to_numpy(np.int64).view(np.uint64),
+        )
+
+    def sample(self, state: DataFrame, gidx: int, budget: int):
+        alg = self.alg
+        if self.roots is None:
+            k = min(ROUND0_GROUPS, budget)
+            return k, "distributed", self._collect(alg._reduce(state, None, 0, k))
+        if self.batch is None:
+            g = alg.geom
+            kb = min(budget - gidx, FINISH_BATCH_GROUPS)
+            slice_bytes = (kb * g.cols_per_sample * g.bkt_per_col + 1) * 16
+            if len(self.roots) * slice_bytes > self.finish_bytes:
+                samples = alg._reduce(state, self.active_table(), gidx, gidx + 1)
+                return 1, "distributed", self._collect(samples)
+            rows = alg._reduce(
+                state, self.active_table(), gidx, gidx + kb, sample=False
+            ).collect()
+            acc = np.frombuffer(
+                b"".join(r["sketch"] for r in rows), dtype=np.uint64
+            ).reshape(len(rows), -1, 2).copy()
+            roots = np.array([r["root"] for r in rows], dtype=np.int64)
+            self.batch = [0, kb, roots, acc]
+        gi, kb, roots, acc = self.batch
+        self.batch[0] += 1
+        sm = SketchMatrix(_SliceGeom(alg.geom, acc.shape[1], kb), len(roots), acc)
+        status, eid = sm.sample_many(gi)
+        return 1, "driver_finish", (roots, status, eid)
+
+    def apply(self, samples) -> dict:
+        roots, status, eid = samples
+        n = self.alg.num_vertices
+        good = status == GOOD
+        lo, hi = decode_edges(eid[good], n)
+        valid = (lo >= 0) & (lo < hi) & (hi < n)  # checksum false-positive guard
+        lo, hi = lo[valid], hi[valid]
+        # vectorized bulk union: the applied tree-edge set is a valid
+        # spanning forest of the sampled edges (dsu.py docstring); labels
+        # are identical to sequential replay
+        applied = self.dsu.union_edges_bulk(lo, hi)
+        self.forest.extend(zip(lo[applied].tolist(), hi[applied].tolist()))
+        live = status != ZERO
+        self.roots, inv = np.unique(self.dsu.find_many(roots[live]), return_inverse=True)
+        if self.batch is not None:
+            gi, kb, _, acc = self.batch
+            if gi == kb:
+                self.batch = None
+            else:  # combine the slices of components merged this round
+                acc2 = np.zeros((len(self.roots),) + acc.shape[1:], dtype=np.uint64)
+                with np.errstate(over="ignore"):
+                    np.add.at(acc2, inv, acc[live])
+                self.batch = [gi, kb, self.roots, acc2]
+        return {"good_samples": int(good.sum()),
+                "fail_samples": int((status == FAIL).sum()),
+                "zero_samples": int((~live).sum()),
+                "merged": int(applied.sum())}
+
+
+class _TableLabels:
+    """connected_components_distributed()'s label store: a checkpointed
+    (vertex, root, act) table, act marking members of active components —
+    nothing Θ(num_vertices) is held on the driver. Each round samples k
+    groups (adaptive, see connected_components_distributed) into a
+    checkpoint whose status counts ride observe()."""
+
+    def __init__(self, alg: SketchCC, state: DataFrame, k: int, remap_bytes: int):
+        self.alg, self.k, self.remap_bytes = alg, k, remap_bytes
+        self.labels = state.select(
+            "vertex", F.col("vertex").alias("root"), F.lit(True).alias("act")
+        ).localCheckpoint(eager=True)
+        self.identity = True  # every vertex its own component (round 0)
+        self.active: float = math.inf
+
+    def sample(self, state: DataFrame, gidx: int, budget: int):
+        k = min(self.k, budget - gidx)
+        if self.active < math.inf:
+            # stretch the tail of the budget: keep k only if, assuming this
+            # round achieves no more than one classic halving, the leftover
+            # budget could still finish one group at a time
+            reserve = math.ceil(math.log2(self.active))
+            if budget - gidx - k < reserve:
+                k = max(1, min(k, budget - gidx - reserve))
+        obs = Observation()
+        samples = self.alg._reduce(state, self.active_table(), gidx, gidx + k).observe(
+            obs,
+            *[F.sum((F.col("status") == F.lit(int(s))).cast("long")).alias(name)
+              for s, name in ((GOOD, "good_samples"), (FAIL, "fail_samples"),
+                              (ZERO, "zero_samples"))],
+        ).localCheckpoint(eager=True)
+        return k, "distributed", (samples, obs)
+
+    def active_table(self) -> DataFrame | None:
+        if self.identity:
+            return None
+        return self.labels.where(F.col("act")).select("vertex", "root")
+
+    def apply(self, samples) -> dict:
+        from graphzeppelin_spark.operators.connectivity import connected_components_df
+        from graphzeppelin_spark.session import free_local_checkpoint
+
+        samples, obs = samples
+        counts = {name: int(v or 0) for name, v in obs.get.items()}
+        n = self.alg.num_vertices
+        # endpoints of the sampled edges, lifted to component ids; dedupe
+        # across groups before the label joins
+        ends = samples.where(F.col("status") == F.lit(int(GOOD))).select(
+            F.expr(f"eid div {n}").alias("lo"),
+            F.pmod("eid", F.lit(n)).cast("long").alias("hi"),
+        ).where(
+            (F.col("lo") >= 0) & (F.col("lo") < F.col("hi")) & (F.col("hi") < n)
+        ).distinct()
+        if self.identity:  # endpoints ARE the component ids
+            comp_edges = ends.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+        else:
+            lv = self.labels.select(F.col("vertex").alias("lo"), F.col("root").alias("ra"))
+            hv = self.labels.select(F.col("vertex").alias("hi"), F.col("root").alias("rb"))
+            comp_edges = (
+                ends.join(lv, "lo").join(hv, "hi")
+                .where(F.col("ra") != F.col("rb"))
+                .select(F.least("ra", "rb").alias("src"), F.greatest("ra", "rb").alias("dst"))
+                .distinct()
+            )
+        # the edge count rides observe() on the checkpoint that materializes
+        # comp_edges anyway — no separate count job
+        ce_obs = Observation()
+        comp_edges = comp_edges.observe(
+            ce_obs, F.count(F.lit(1)).alias("m")
+        ).localCheckpoint(eager=True)
+        counts["n_edges"] = n_edges = int(ce_obs.get["m"])
+        self.identity = False
+        if n_edges == 0 and counts["fail_samples"] == 0:
+            # every sampled component is ZERO: nothing merges or stays active
+            self.active = 0
+        else:
+            nonzero = (
+                samples.where(F.col("status") != F.lit(int(ZERO)))
+                .select("root").distinct().withColumn("_nz", F.lit(True))
+            )
+            joined = self.labels.select("vertex", "root").join(nonzero, "root", "left")
+            root = F.col("root")
+            if n_edges:
+                if n_edges * 16 <= self.remap_bytes:
+                    remap = F.broadcast(self._remap_from_edges_driver(comp_edges))
+                else:
+                    remap = connected_components_df(comp_edges).select(
+                        F.col("v").alias("root"), F.col("component").alias("new_root")
+                    ).where(F.col("root") != F.col("new_root"))
+                joined = joined.join(remap, "root", "left")
+                root = F.coalesce("new_root", "root")
+            lbl_obs = Observation()
+            old = self.labels
+            self.labels = (
+                joined.select(
+                    "vertex", root.alias("root"),
+                    F.coalesce("_nz", F.lit(False)).alias("act"),
+                )
+                # next round's adaptive-k input, read off this checkpoint's
+                # own materialization: approximate count of distinct active
+                # roots (nulls — inactive vertices — are ignored)
+                .observe(
+                    lbl_obs,
+                    F.approx_count_distinct(F.when(F.col("act"), F.col("root"))).alias("ac"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            free_local_checkpoint(old)
+            self.active = int(lbl_obs.get["ac"])
+            if self.active <= 4:
+                # approx_count_distinct errs by ~2-5%: confirm small counts
+                # exactly (cheap, over the checkpointed table) so the stop at
+                # <= 1 active component is exact
+                self.active = self.labels.where(F.col("act")).select("root").distinct().count()
+        free_local_checkpoint(comp_edges)
+        free_local_checkpoint(samples)
+        return counts
+
+    def _remap_from_edges_driver(self, comp_edges: DataFrame) -> DataFrame:
+        """(root, new_root) remap for a BOUNDED component-edge set, solved on
+        the driver in numpy (size gated by the caller on the actual edge
+        count, never Θ(num_vertices)). Labels are canonical (min component
+        id) because ids are sorted before the local DSU runs."""
+        pdf = comp_edges.toPandas()
+        src = pdf["src"].to_numpy(np.int64)
+        dst = pdf["dst"].to_numpy(np.int64)
+        ids = np.unique(np.concatenate([src, dst]))
+        local = NumpyDSU(len(ids))
+        local.union_edges_bulk(
+            np.searchsorted(ids, src), np.searchsorted(ids, dst)
+        )
+        new_root = ids[local.labels()]
+        changed = new_root != ids
+        return self.alg.spark.createDataFrame(
+            pd.DataFrame({"root": ids[changed], "new_root": new_root[changed]})
         )
 
 

@@ -79,7 +79,7 @@ class GraphStreamDriver:
         # opt-in CROSS-BATCH stream validation (the one malformation class
         # the |net|>1 in-slice guard cannot see: two inserts of one edge in
         # DIFFERENT micro-batches each net +1 and silently corrupt the
-        # merged state — sketch_cc.updates_from_stream docstring). The
+        # merged state — sketch_cc.SketchCC._net_guard docstring). The
         # reference assumes an alternating stream per edge at the producer;
         # this engine can additionally CHECK it, because unlike the
         # reference it already materializes distributed per-batch tables: a

@@ -50,7 +50,13 @@ def build_state_arrow(alg, stream):
         ]
     )
     geom = alg.geom
-    updates = alg.packed_updates(stream).repartition(alg.num_partitions, "vertex")
+    n = alg.num_vertices
+    # (vertex, seid) rows decoded from build_state's fused key column
+    updates = alg._packed_skeys(stream).selectExpr(
+        f"if((abs(o) & 1) = 1, shiftright(abs(o), 1) % {n},"
+        f" shiftright(abs(o), 1) div {n}) AS vertex",
+        "if(o > 0, 1L, -1L) * shiftright(abs(o), 1) AS seid",
+    ).repartition(alg.num_partitions, "vertex")
 
     def _build(batches):
         vs, ss = [], []

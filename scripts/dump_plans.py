@@ -52,7 +52,7 @@ def main() -> None:
     plans["sketch_build_state"] = fmt(alg.build_state(stream))
     state = alg.build_state(stream).localCheckpoint(eager=True)
     labels_df = alg._labels_df(np.arange(1024, dtype=np.int64), None)
-    plans["sketch_boruvka_round"] = fmt(alg._sampled_components(state, labels_df, 0, 1))
+    plans["sketch_boruvka_round"] = fmt(alg._reduce(state, labels_df, 0, 1))
 
     for name, plan in plans.items():
         with open(os.path.join(OUT, f"{name}.txt"), "w") as f:

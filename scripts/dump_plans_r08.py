@@ -4,7 +4,7 @@ plans/r08/<name>_{before|after}.txt (stage = sys.argv[1]).
 Iterative operators (cc_chain, pagerank, labelprop) execute their loop while
 the final DataFrame is constructed; the dumped plan is the final labeling/
 ranks job — the per-iteration shape is captured separately via the operator
-internals (build_state, sampled_components, reduced_slices).
+internals (build_state and the round reduce `_reduce`).
 """
 
 from __future__ import annotations
@@ -59,12 +59,11 @@ def main() -> None:
         plans["sketch_build_state"] = fmt(alg.build_state(stream))
         state = alg.build_state(stream).localCheckpoint(eager=True)
         labels_df = alg._labels_df(np.arange(1024, dtype=np.int64), None)
-        plans["sketch_boruvka_round"] = fmt(
-            alg._sampled_components(state, labels_df, 0, 1)
+        plans["sketch_boruvka_round"] = fmt(alg._reduce(state, labels_df, 0, 1))
+        plans["sketch_round0_sample"] = fmt(alg._reduce(state, None, 0, 1))
+        plans["sketch_driver_finish_reduce"] = fmt(
+            alg._reduce(state, labels_df, 1, alg.geom.num_samples, sample=False)
         )
-        plans["sketch_round0_sample"] = fmt(alg._sampled_vertices(state, 0, 1))
-        reduced, _ = alg._reduced_slices(state, labels_df, 1, alg.geom.num_samples)
-        plans["sketch_driver_finish_reduce"] = fmt(reduced)
 
     for name, plan in plans.items():
         path = os.path.join(OUT, f"{name}_{STAGE}.txt")

@@ -5,7 +5,7 @@ updates — ~4x kron_19's 143M, the next decade. Measures where the
 distributed-labels path's costs move as state grows another 4x:
 
 - per-round stats (labels-join width, sampled-edge counts, adaptive-k
-  decisions, wall per round) from `last_distributed_stats`;
+  decisions, wall per round) from `last_boruvka_stats`;
 - whether adaptive-k's budget reserve ever triggers on a real stream;
 - driver-DSU boruvka at the same scale for the crossover comparison
   (current guidance says driver-DSU wins below ~10^8 vertices — this adds
@@ -124,8 +124,8 @@ def main() -> None:
         dist_runs.append(round(time.time() - t0, 2))
         dist_steal.append(meter.steal_pct())
         if i == 0:
-            out["distributed_round_stats"] = alg.last_distributed_stats["rounds"]
-            out["distributed_budget_exhausted"] = alg.last_distributed_stats["exhausted"]
+            out["distributed_round_stats"] = alg.last_boruvka_stats["rounds"]
+            out["distributed_budget_exhausted"] = alg.last_boruvka_stats["exhausted"]
             out["distributed_cc_components"] = n_comp
     out["distributed_cc_runs_sec"] = dist_runs
     out["distributed_cc_steal_pcts"] = dist_steal

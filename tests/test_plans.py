@@ -89,7 +89,7 @@ def test_sampled_components_shuffle_is_pruned(spark, parquet_stream):
     prune+partial-sum python stage and the final sample stage — never
     upstream of the prune, where it would shuffle full-width sketches. Holds
     for both the driver-DSU and the distributed-labels path (both call
-    _sampled_components)."""
+    _reduce)."""
     import numpy as np
 
     from graphzeppelin_spark.operators.sketch_cc import SketchCC
@@ -97,7 +97,7 @@ def test_sampled_components_shuffle_is_pruned(spark, parquet_stream):
     alg = SketchCC(spark, num_vertices=256, seed=3)
     state = alg.build_state(parquet_stream).localCheckpoint(eager=True)
     labels_df = alg._labels_df(np.arange(256, dtype=np.int64), None)
-    plan = _plan(alg._sampled_components(state, labels_df, 0, 1))
+    plan = _plan(alg._reduce(state, labels_df, 0, 1))
     # formatted-explain details are numbered in execution order
     i_partial = plan.index("_partial(")
     i_exchange = plan.index("hashpartitioning(root")

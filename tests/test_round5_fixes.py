@@ -285,8 +285,8 @@ def test_distributed_cc_warns_on_budget_exhaustion(spark):
     state.count()
     with pytest.warns(RuntimeWarning, match="budget exhausted"):
         alg.connected_components_distributed(state, max_rounds=1)
-    assert alg.last_distributed_stats["exhausted"] is True
-    st = alg.last_distributed_stats["rounds"]
+    assert alg.last_boruvka_stats["exhausted"] is True
+    st = alg.last_boruvka_stats["rounds"]
     assert len(st) == 1 and st[0]["k"] == 1  # budget-capped k
     state.unpersist()
 
@@ -305,7 +305,7 @@ def test_distributed_cc_records_round_stats(spark):
     state = alg.build_state(_toggle_stream(spark, edges)).persist()
     state.count()
     out = alg.connected_components_distributed(state).toPandas()
-    stats = alg.last_distributed_stats
+    stats = alg.last_boruvka_stats
     assert stats["exhausted"] is False
     assert len(stats["rounds"]) >= 1
     for r in stats["rounds"]:

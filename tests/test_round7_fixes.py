@@ -43,8 +43,7 @@ def _stream_df(spark, rows):
 def test_distributed_cc_early_exit_single_component(spark):
     """One connected graph: after the round that merges everything into a
     single active component, NO further sampling round may run — the stats
-    must show an early_exit on the last round and no trailing n_edges==0
-    confirmation round."""
+    must show an early exit and no trailing n_edges==0 confirmation round."""
     n = 128
     s = path_graph_stream(n)
     alg = SketchCC(spark, num_vertices=n, seed=7)
@@ -55,12 +54,12 @@ def test_distributed_cc_early_exit_single_component(spark):
     for v, c in zip(out["vertex"], out["component"]):
         assert expected[v] == c
 
-    stats = alg.last_distributed_stats["rounds"]
-    assert stats[-1].get("early_exit") is True
-    assert stats[-1]["active_exact"] <= 1
+    stats = alg.last_boruvka_stats
+    assert stats["early_exit"] is True
+    assert stats["rounds"][-1]["active_after"] <= 1
     # the whole point: no round ever ran just to observe an empty sample
-    assert all(r["n_edges"] > 0 for r in stats)
-    assert not alg.last_distributed_stats["exhausted"]
+    assert all(r["n_edges"] > 0 for r in stats["rounds"])
+    assert not stats["exhausted"]
 
 
 def test_distributed_cc_two_components_still_confirms(spark):
@@ -82,13 +81,13 @@ def test_distributed_cc_two_components_still_confirms(spark):
     assert comp[32] == comp[33]
     assert comp[0] != comp[32]
 
-    stats = alg.last_distributed_stats["rounds"]
+    stats = alg.last_boruvka_stats
     # both components complete in round 0 but stay act-flagged: exact
     # count is 2 there — no early exit is permitted
-    assert stats[0]["active_exact"] == 2
-    assert not any(r.get("early_exit") for r in stats)
+    assert stats["rounds"][0]["active_after"] == 2
+    assert not stats["early_exit"]
     # termination was the honest confirmation round
-    assert stats[-1]["n_edges"] == 0
+    assert stats["rounds"][-1]["n_edges"] == 0
 
 
 def test_distributed_cc_early_exit_lone_straggler(spark):
@@ -109,11 +108,11 @@ def test_distributed_cc_early_exit_lone_straggler(spark):
     assert comp[0] == comp[1] and comp[0] != comp[16]
     assert len({comp[v] for v in range(16, 29)}) == 1
 
-    stats = alg.last_distributed_stats["rounds"]
-    if stats[-1].get("early_exit"):
+    stats = alg.last_boruvka_stats
+    if stats["early_exit"]:
         # the exit saved the confirmation round: no empty round ran
-        assert all(r["n_edges"] > 0 for r in stats)
-        assert stats[-1]["active_exact"] <= 1
+        assert all(r["n_edges"] > 0 for r in stats["rounds"])
+        assert stats["rounds"][-1]["active_after"] <= 1
 
 
 # ----------------------------------------------- _rebuild_parity prefix guard

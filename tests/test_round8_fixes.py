@@ -52,7 +52,7 @@ def test_round_sampler_ships_sliced_groups(spark):
         stream_df(spark, multiples_graph_stream(256))
     ).localCheckpoint(eager=True)
     plan = state.sparkSession._jvm.PythonSQLUtils  # noqa: F841 (import guard)
-    df = alg._sampled_vertices(state, 1, 2)
+    df = alg._reduce(state, None, 1, 2)
     txt = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -185,13 +185,16 @@ def _state_checksum(state):
     )
 
 
-def test_fused_skey_build_state_byte_identical(spark, monkeypatch):
+def test_fused_skey_build_state_byte_identical(spark):
     """build_state's fused one-column ingest encoding (skey = u*(eid*2+is_hi))
-    must produce a byte-identical state to the two-column (vertex, seid)
-    path — including delete updates and repeat insert/delete toggles."""
+    must produce a state byte-identical to a driver-side numpy build of the
+    same live edges (SketchMatrix.update_many + encode_group_rows) —
+    including delete updates and repeat insert/delete toggles — and the
+    query result over that fused state must match the exact oracle."""
     import pandas as pd
 
-    from graphzeppelin_spark.operators import sketch_cc as scc
+    from graphzeppelin_spark.operators.sketch_cc import STATE_SCHEMA
+    from graphzeppelin_spark.sketch.kernel import SketchMatrix, encode_edges
 
     n = 300
     rng = np.random.default_rng(7)
@@ -215,14 +218,26 @@ def test_fused_skey_build_state_byte_identical(spark, monkeypatch):
     stream = stream_df(spark, pdf)
 
     alg = SketchCC(spark, num_vertices=n, seed=5)
-    assert n <= scc.FUSED_KEY_MAX_N  # fused path engaged
-    cs_fused = _state_checksum(alg.build_state(stream))
-    monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)  # force two-column path
-    cs_twocol = _state_checksum(alg.build_state(stream))
-    assert cs_fused == cs_twocol
-    # and the query result over the fused state matches the exact oracle
-    labels, _ = alg.boruvka(alg.build_state(stream))
+    state = alg.build_state(stream)
+    # numpy build: each live edge is +eid at its lo endpoint, -eid at hi
     edges_np = oracle.live_edges(pdf, n)
+    lo, hi = edges_np.min(axis=1), edges_np.max(axis=1)
+    eids = encode_edges(lo, hi, n)
+    uniq, inv = np.unique(np.concatenate([lo, hi]), return_inverse=True)
+    g = alg.geom
+    sm = SketchMatrix(g, len(uniq))
+    sm.update_many(
+        inv, np.concatenate([eids, eids]),
+        signs=np.concatenate([np.ones(len(lo), np.int64), -np.ones(len(hi), np.int64)]),
+    )
+    dets, grps = encode_group_rows(sm.buckets, g.cols_per_sample * g.bkt_per_col, g.num_samples)
+    expected = spark.createDataFrame(
+        pd.DataFrame({"vertex": uniq.astype(np.int64), "det": dets, "grp": grps}),
+        schema=STATE_SCHEMA,
+    )
+    assert _state_checksum(state) == _state_checksum(expected)
+    # and the query result over the fused state matches the exact oracle
+    labels, _ = alg.boruvka(state)
     np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
 
 
